@@ -60,7 +60,14 @@ def run_extraction(
     plans.checkpoint.ProcessingControl for cooperative stop (a stopped
     run resumes from the bucket registry); ``on_chunk`` is a progress
     callback (idx, n_chunks, buckets); ``page_setups_json`` overrides
-    the built-in page setups (CLI -e/--extraction-settings)."""
+    the built-in page setups (CLI -e/--extraction-settings).
+
+    ``chunk_size`` is buckets per chunk. Each chunk runs three jobs: the
+    input scan and shuffle; one wave of ``defaultParallelism`` Python
+    kernel tasks feeding the bucket-partitioned write; the JVM-only
+    registry append. ``partition_id`` in the output (and so the rows of
+    ``metrics_partitions``) is the kernel task's index within its
+    chunk, so its range follows ``defaultParallelism``."""
 
     from pyspark.sql import Observation
 
@@ -68,9 +75,16 @@ def run_extraction(
 
     def process(chunk: DataFrame) -> DataFrame:
         pruned = chunk.select("url", "warc_ts", "html", "lang", "bucket")
-        # salt/repartition on the bucket key itself: co-locates the
-        # kernel work with the downstream partitioned write
-        pruned = pruned.repartition(max(8, chunk_size), F.col("bucket"), F.col("url"))
+        # one kernel task per core, so every Python worker pays its
+        # fixed start-up cost once per chunk. Hashing the full url (not
+        # only the bucket) keeps a hot domain from stalling one task;
+        # it spreads each bucket over every task, so a chunk writes up
+        # to tasks x buckets small files.
+        pruned = pruned.repartition(
+            chunk.sparkSession.sparkContext.defaultParallelism,
+            F.col("bucket"),
+            F.col("url"),
+        )
         kernel = (
             ex._extract_batches
             if page_setups_json is None

@@ -25,6 +25,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import path_exists
+
 
 class ProcessingControl:
     """Cooperative cancellation + processing state, the Spark recast of
@@ -62,19 +64,29 @@ class ProcessingControl:
 
 
 class BucketRegistry:
+    """Append-only ``bucket int`` parquet table of completed buckets."""
+
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
     def completed(self) -> set[int]:
-        try:
-            return {r.bucket for r in self.spark.read.parquet(self.path).collect()}
-        except Exception:
+        """Buckets marked so far. A missing path means a fresh run; the
+        explicit schema makes a registry with no committed part file
+        (only ``_temporary/`` from a killed append) read as empty. Any
+        other read error propagates: treating it as "nothing done"
+        would silently recompute the whole crawl."""
+        if not path_exists(self.spark, self.path):
             return set()
+        rows = self.spark.read.schema("bucket int").parquet(self.path).collect()
+        return {r.bucket for r in rows}
 
     def mark(self, buckets: list[int]) -> None:
-        df = self.spark.createDataFrame(
-            [(int(b),) for b in buckets], schema="bucket int"
+        # a literal relation built in the JVM: no PythonRDD job, so no
+        # Python worker starts just to unpickle a few ints
+        values = ", ".join(f"({int(b)})" for b in buckets)
+        df = self.spark.sql(
+            f"SELECT CAST(col1 AS INT) AS bucket FROM VALUES {values}"
         )
         df.coalesce(1).write.mode("append").parquet(self.path)
 
@@ -95,6 +107,13 @@ def run_checkpointed(
     """Run ``process(chunk_df) -> DataFrame`` over bucket chunks with
     resume. Returns {'processed_chunks': n, 'skipped_buckets': m,
     'stopped': bool}.
+
+    ``chunk_size`` is the number of buckets per chunk; it sets how much
+    work one registry mark covers, not the task count (``process``
+    decides the partitioning). Each chunk runs the jobs of its
+    bucket-partitioned write (for ``run_extraction``: scan+shuffle,
+    then one Python task wave + the partitioned write), then one
+    JVM-only job that appends its bucket ids to the registry.
 
     ``control`` enables cooperative stop (see ProcessingControl): each
     chunk's jobs run under the control's job group with task

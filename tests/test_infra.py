@@ -15,6 +15,45 @@ def test_bucket_registry_roundtrip(spark, tmp_path):
     assert reg.completed() == {0, 3, 5}
 
 
+def test_bucket_registry_unfinished_append_reads_empty(spark, tmp_path):
+    """A killed first append leaves only ``_temporary/``: no bucket is
+    done, and reading that must not fail."""
+    from indu_doc_transformer_spark.plans.checkpoint import BucketRegistry
+
+    attempt = tmp_path / "reg" / "_temporary" / "0" / "_temporary" / "attempt_0"
+    attempt.mkdir(parents=True)
+    (attempt / "part-00000.snappy.parquet").write_bytes(b"PAR1 half written")
+    assert BucketRegistry(spark, str(tmp_path / "reg")).completed() == set()
+
+
+def test_bucket_registry_corrupt_part_raises(spark, tmp_path):
+    """A read error must surface, not read as "nothing done" (which
+    would silently recompute the whole crawl)."""
+    import pytest
+
+    from indu_doc_transformer_spark.plans.checkpoint import BucketRegistry
+
+    reg = BucketRegistry(spark, str(tmp_path / "reg"))
+    reg.mark([1])
+    (tmp_path / "reg" / "part-99999-corrupt.snappy.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        reg.completed()
+
+
+def test_bucket_registry_reads_parts_of_earlier_writer(spark, tmp_path):
+    """Part files appended through ``createDataFrame`` (the earlier
+    mark implementation) and new marks read back as their union, so a
+    run resumes across the upgrade."""
+    from indu_doc_transformer_spark.plans.checkpoint import BucketRegistry
+
+    path = str(tmp_path / "reg")
+    old = spark.createDataFrame([(2,), (4,)], schema="bucket int")
+    old.coalesce(1).write.mode("append").parquet(path)
+    reg = BucketRegistry(spark, path)
+    reg.mark([7, 9])
+    assert reg.completed() == {2, 4, 7, 9}
+
+
 def test_bucket_col_stable(spark):
     """Bucket ids are a pure function of url — stable across restarts
     (the registry contract depends on it)."""

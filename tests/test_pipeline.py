@@ -116,6 +116,76 @@ def test_kill_and_resume_is_idempotent(spark, tmp_path):
     assert cnt == N  # zero duplicated
 
 
+def test_chunk_job_structure(spark, tmp_path):
+    """Each extraction chunk runs one Python kernel wave of
+    ``defaultParallelism`` tasks, and its registry mark is a JVM-only
+    literal relation (no LogicalRDD, so no PythonRDD job)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test-chunk-structure"
+    docs = corpus_df(spark, N, partitions=3)
+    seen = []
+
+    def jobs_so_far(*_):
+        seen.append(set(tracker.getJobIdsForGroup(group)))
+
+    sc.setJobGroup(group, "chunk job structure")
+    try:
+        stats = pipeline.run_extraction(
+            docs, str(tmp_path / "out"), num_buckets=8, chunk_size=2,
+            on_chunk=jobs_so_far,
+        )
+        jobs_so_far()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert stats["processed_chunks"] == 4
+
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters
+    executions = [
+        (set(conv.asJava(e.jobs().keySet())), e.physicalPlanDescription())
+        for e in conv.asJava(
+            spark._jsparkSession.sharedState().statusStore().executionsList()
+        )
+    ]
+    for before, after in zip(seen[:-1], seen[1:]):
+        chunk_jobs = after - before
+        kernel = [
+            jobs for jobs, plan in executions
+            if jobs & chunk_jobs and "MapInPandas" in plan
+        ]
+        marks = [
+            plan for jobs, plan in executions
+            if jobs & chunk_jobs and "_registry" in plan
+        ]
+        assert len(kernel) == 1 and len(marks) == 1
+        # the kernel runs in the last stage of its jobs: the one that
+        # reads the chunk's shuffle
+        kernel_stage = max(
+            s for j in kernel[0] for s in tracker.getJobInfo(j).stageIds
+        )
+        assert tracker.getStageInfo(kernel_stage).numTasks == sc.defaultParallelism
+        assert "LogicalRDD" not in marks[0] and "ExistingRDD" not in marks[0]
+
+
+@pytest.mark.parametrize("chunk_size", [2, 8])
+def test_extraction_output_is_layout_invariant(spark, tmp_path, chunk_size):
+    """The checkpointed extraction equals the plain operator on every
+    column but the layout ones (partition_id, kernel_docs, bucket),
+    whatever the chunking."""
+    from indu_doc_transformer_spark.operators import extraction as ex
+
+    docs = corpus_df(spark, N, partitions=3)
+    out = str(tmp_path / "out")
+    pipeline.run_extraction(docs, out, num_buckets=8, chunk_size=chunk_size)
+    layout = {"partition_id", "kernel_docs", "bucket"}
+    cols = [c for c in ex.extract(docs).columns if c not in layout]
+    rows = lambda df: sorted(df.select(*cols).collect(), key=lambda r: r.url)
+    back = rows(spark.read.parquet(os.path.join(out, "extracted")))
+    assert len(back) == N
+    assert back == rows(ex.extract(docs))
+
+
 def test_stop_between_chunks_and_resume(spark, tmp_path):
     """Cooperative stop (ProcessingControl — reference
     plugin.py:131-142 stop_processing recast): a stop requested while
