@@ -23,8 +23,9 @@ in-memory dicts row by row, we:
 Dedup-by-GUID replaces dedup-on-create; Catalyst plans partial/final
 hash aggregation (the reference's sub_god merge, A9) automatically.
 
-The pure-Python oracle (kernels/assemble.py) defines expected results;
-tests/test_assembly.py verifies set-equality of every output table.
+The pure-Python oracle (tests/oracles/god_factory.py) defines expected
+results; tests/test_assembly.py verifies set-equality of every output
+table.
 """
 
 from __future__ import annotations
@@ -554,7 +555,9 @@ class Assembler:
         """One per-page-type branch: filter -> branch-specific precompute
         -> request projection -> explode.
 
-        Design note (measured, scripts/profile_union.py): a single CASE
+        Design note (measured; a traced run, ``perfbench/run.py
+        --workload crawl_extract --trace 1``, reports this cost as
+        assembly.plan_build_s / assembly.assemble_s): a single CASE
         projection over all 9 handlers compiles to one giant janino
         class (~35s one-time compile, and too wide for whole-stage
         codegen). Nine small per-type projections compile in ~2s each

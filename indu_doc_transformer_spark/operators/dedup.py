@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.cache import register_cache
-from .textstats import norm_text
+from .textstats import _py_tokens, _py_windows, _tokens, norm_text
 
 
 def word_shingles(c: Column, k: int = 3) -> Column:
@@ -901,14 +901,14 @@ def line_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def _span_windows_udf(k: int):
     """Arrow-batched kernel for the k-token window hashes of
-    ``duplicate_span_removal`` — bit-identical to the SQL fold below
-    (same tokenization contract as decontam._distinct_grams_udf:
-    ASCII-space trim, java-\\s+ split with kept empties, NULL -> empty,
-    md5 over UTF-8; positions 1-based like the SQL sequence). The SQL
-    form stays as the fast=False parity oracle
+    ``duplicate_span_removal``: (start, md5) per window, positions
+    1-based like the SQL sequence. Tokens and windows come from
+    textstats._py_tokens/_py_windows (the decontam gram-kernel
+    contract: ASCII-space trim, java-\\s+ split with kept empties, md5
+    over UTF-8); NULL text -> empty. Bit-identical to the SQL fold
+    tests/parity/ngram_folds.span_windows
     (tests/test_operators.py::test_span_window_kernel_matches_sql)."""
     import hashlib
-    import re
 
     from pyspark.sql.types import (
         ArrayType,
@@ -918,7 +918,6 @@ def _span_windows_udf(k: int):
         StructType,
     )
 
-    ws = re.compile(r"\s+", re.ASCII)
     schema = ArrayType(
         StructType(
             [StructField("start", IntegerType()), StructField("h", StringType())]
@@ -933,15 +932,9 @@ def _span_windows_udf(k: int):
             if t is None:
                 out.append([])
                 continue
-            toks = ws.split(t.strip(" ").lower())
-            if len(toks) < k:
-                out.append([])
-                continue
+            wins = _py_windows(_py_tokens(t), k)
             out.append(
-                [
-                    (i + 1, md5(" ".join(toks[i : i + k]).encode()).hexdigest())
-                    for i in range(len(toks) - k + 1)
-                ]
+                [(i + 1, md5(w.encode()).hexdigest()) for i, w in enumerate(wins)]
             )
         return pd.Series(out)
 
@@ -949,7 +942,7 @@ def _span_windows_udf(k: int):
 
 
 def duplicate_span_removal(
-    df: DataFrame, id_col: str, text_col: str, k: int = 8, fast: bool = True
+    df: DataFrame, id_col: str, text_col: str, k: int = 8
 ) -> DataFrame:
     """ExactSubstr-style duplicated-span removal (the Lee et al.
     "Deduplicating Training Data Makes Language Models Better"
@@ -968,34 +961,18 @@ def duplicate_span_removal(
     over the hot hash); flagged starts join back id-keyed; the
     coverage filter is a native higher-order exists per token. Two
     shuffles: hash agg + id-keyed rebuild."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    base = df.select(F.col(id_col).alias("id"), toks.alias("toks"))
-    # fast=True hashes the k-token windows in the Arrow kernel (the
-    # decontam gram-kernel pattern); fast=False keeps the interpreted
-    # SQL fold as the parity oracle. Either way the explode is
-    # explode_outer + isNotNull (guide §4.4): a bare explode's pushed
-    # size()>0 filter would re-run the whole window construction per
-    # row. Window elements are constructed structs (never NULL);
-    # short docs' empty arrays drop identically in both forms.
-    if fast:
-        win_arr = _span_windows_udf(k)(F.col(text_col))
-        wins_src = df.select(F.col(id_col).alias("id"), win_arr.alias("wa"))
-    else:
-        win_arr = F.when(
-            F.size("toks") >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - (k - 1)),
-                lambda i: F.struct(
-                    i.alias("start"),
-                    F.md5(F.array_join(F.slice("toks", i, k), " ")).alias("h"),
-                ),
-            ),
-        ).otherwise(
-            F.expr("cast(array() as array<struct<start:int,h:string>>)")
-        )
-        wins_src = base.select("id", win_arr.alias("wa"))
+    base = df.select(
+        F.col(id_col).alias("id"), _tokens(F.col(text_col)).alias("toks")
+    )
+    # The k-token windows are hashed in the Arrow kernel. The explode
+    # is explode_outer + isNotNull (guide §4.4): a bare explode's
+    # pushed size()>0 filter would re-evaluate the window array per
+    # row. Window elements are constructed structs (never NULL); short
+    # docs' empty arrays drop.
+    win_arr = _span_windows_udf(k)(F.col(text_col))
     wins = (
-        wins_src.select("id", F.explode_outer("wa").alias("w"))
+        df.select(F.col(id_col).alias("id"), win_arr.alias("wa"))
+        .select("id", F.explode_outer("wa").alias("w"))
         .where(F.col("w").isNotNull())
         .select("id", F.col("w.start").alias("start"), F.col("w.h").alias("h"))
     )

@@ -103,11 +103,6 @@ def make_extract_batches(page_setups_json: str | None = None):
     return _extract_batches
 
 
-# the default-config kernel instance (pipeline / bench / tests import
-# this name directly)
-_extract_batches = make_extract_batches()
-
-
 def salt_by_url(df: DataFrame, num_partitions: int) -> DataFrame:
     """Explicit url-hash salting + repartition (north rule): hash-
     partition on the full url so a hot host cannot stall a partition.
@@ -132,12 +127,9 @@ def extract(
     pruned = docs.select(*cols)
     if num_partitions:
         pruned = salt_by_url(pruned, num_partitions)
-    kernel = (
-        _extract_batches
-        if page_setups_json is None
-        else make_extract_batches(page_setups_json)
+    return pruned.mapInPandas(
+        make_extract_batches(page_setups_json), schema=EXTRACTION_SCHEMA
     )
-    return pruned.mapInPandas(kernel, schema=EXTRACTION_SCHEMA)
 
 
 # ------------------------------------------------------------------
@@ -214,6 +206,43 @@ def partition_metrics(extracted: DataFrame) -> DataFrame:
     )
 
 
+def _record_frames(records: Iterator[dict]) -> Iterator[pd.DataFrame]:
+    """Adapt an archive record stream to the (url, warc_ts, html, lang)
+    frames the extraction kernel consumes, flushing every ~64 MiB of
+    html so memory stays bounded (the two fused WARC extractors)."""
+    flush_bytes = 64 << 20
+    urls, tss, htmls, langs = [], [], [], []
+    pending = 0
+
+    def flush():
+        nonlocal pending
+        out = pd.DataFrame(
+            {
+                "url": list(urls),
+                "warc_ts": pd.to_datetime(
+                    pd.Series(tss, dtype="object"),
+                    utc=True, errors="coerce",
+                ).dt.tz_localize(None),
+                "html": list(htmls),
+                "lang": list(langs),
+            }
+        )
+        urls.clear(); tss.clear(); htmls.clear(); langs.clear()
+        pending = 0
+        return out
+
+    for rec in records:
+        urls.append(rec["url"])
+        tss.append(rec["ts"])
+        htmls.append(rec["html"])
+        langs.append(rec["lang"])
+        pending += len(rec["html"])
+        if pending >= flush_bytes:
+            yield flush()
+    if urls:
+        yield flush()
+
+
 def extract_from_warc(
     spark,
     path: str,
@@ -241,63 +270,26 @@ def extract_from_warc(
     from ..sources.warc import _file_record_stream, _file_source, _is_local
 
     local = _is_local(path)
-    base_kernel = (
-        _extract_batches
-        if page_setups_json is None
-        else make_extract_batches(page_setups_json)
-    )
+    base_kernel = make_extract_batches(page_setups_json)
+
+    def records(batches: Iterator[pd.DataFrame]) -> Iterator[dict]:
+        for pdf in batches:
+            contents = pdf["content"] if "content" in pdf.columns else None
+            for i, p in enumerate(pdf["path"]):
+                content = None if contents is None else contents.iloc[i]
+                # open OUTSIDE the salvage try: an unopenable archive
+                # fails the task loudly whatever the error class
+                # (ADVICE r5; same rule as read_warc)
+                stream = _file_record_stream(p, content)
+                try:
+                    for rec in stream:
+                        if not rec.get("bad"):
+                            yield rec
+                except (OSError, EOFError, zlib.error):
+                    continue  # corrupt archive: keep the valid prefix
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def record_frames():
-            """Adapt the archive stream to the (url, warc_ts, html,
-            lang) frames the extraction kernel consumes, flushing
-            every ~64 MiB of html so memory stays bounded."""
-            flush_bytes = 64 << 20
-            urls, tss, htmls, langs = [], [], [], []
-            pending = 0
-
-            def flush():
-                nonlocal pending
-                out = pd.DataFrame(
-                    {
-                        "url": list(urls),
-                        "warc_ts": pd.to_datetime(
-                            pd.Series(tss, dtype="object"),
-                            utc=True, errors="coerce",
-                        ).dt.tz_localize(None),
-                        "html": list(htmls),
-                        "lang": list(langs),
-                    }
-                )
-                urls.clear(); tss.clear(); htmls.clear(); langs.clear()
-                pending = 0
-                return out
-
-            for pdf in batches:
-                contents = pdf["content"] if "content" in pdf.columns else None
-                for i, p in enumerate(pdf["path"]):
-                    content = None if contents is None else contents.iloc[i]
-                    # open OUTSIDE the salvage try: an unopenable
-                    # archive fails the task loudly whatever the error
-                    # class (ADVICE r5; same rule as read_warc)
-                    stream = _file_record_stream(p, content)
-                    try:
-                        for rec in stream:
-                            if rec.get("bad"):
-                                continue
-                            urls.append(rec["url"])
-                            tss.append(rec["ts"])
-                            htmls.append(rec["html"])
-                            langs.append(rec["lang"])
-                            pending += len(rec["html"])
-                            if pending >= flush_bytes:
-                                yield flush()
-                    except (OSError, EOFError, zlib.error):
-                        continue  # corrupt archive: keep the valid prefix
-            if urls:
-                yield flush()
-
-        yield from base_kernel(record_frames())
+        yield from base_kernel(_record_frames(records(batches)))
 
     src = _file_source(spark, path, local, max_concurrent_files)
     return src.mapInPandas(kernel, schema=EXTRACTION_SCHEMA)
@@ -319,47 +311,11 @@ def extract_from_warc_indexed(
     test-pinned."""
     from ..sources.warc import _iter_index_records, _split_index
 
-    base_kernel = (
-        _extract_batches
-        if page_setups_json is None
-        else make_extract_batches(page_setups_json)
-    )
+    base_kernel = make_extract_batches(page_setups_json)
     idx = _split_index(spark, index, warc_root, records_per_split, num_partitions)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def record_frames():
-            flush_bytes = 64 << 20
-            urls, tss, htmls, langs = [], [], [], []
-            pending = 0
-
-            def flush():
-                nonlocal pending
-                out = pd.DataFrame(
-                    {
-                        "url": list(urls),
-                        "warc_ts": pd.to_datetime(
-                            pd.Series(tss, dtype="object"),
-                            utc=True, errors="coerce",
-                        ).dt.tz_localize(None),
-                        "html": list(htmls),
-                        "lang": list(langs),
-                    }
-                )
-                urls.clear(); tss.clear(); htmls.clear(); langs.clear()
-                pending = 0
-                return out
-
-            for _, rec in _iter_index_records(batches):
-                urls.append(rec["url"])
-                tss.append(rec["ts"])
-                htmls.append(rec["html"])
-                langs.append(rec["lang"])
-                pending += len(rec["html"])
-                if pending >= flush_bytes:
-                    yield flush()
-            if urls:
-                yield flush()
-
-        yield from base_kernel(record_frames())
+        records = (rec for _, rec in _iter_index_records(batches))
+        yield from base_kernel(_record_frames(records))
 
     return idx.mapInPandas(kernel, schema=EXTRACTION_SCHEMA)

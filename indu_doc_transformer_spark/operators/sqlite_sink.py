@@ -56,10 +56,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_ASPECTS, AspectsConfig
+
+
 # the ONE canonical value_json serializer (compact, sorted keys):
 # load_sqlite re-canonicalizes with it so round-trips can't drift from
-# the God-factory oracle's serialization
-from ..kernels.assemble import _jdump
+# the God-factory oracle's serialization (tests/oracles/god_factory.py
+# imports it from here)
+def _jdump(obj) -> str:
+    return json.dumps(obj, separators=(",", ":"), ensure_ascii=False, sort_keys=True)
+
 
 # engine enum NAME (parquet) <-> reference enum VALUE (EnumField.db_value,
 # attributes.py:637-647)

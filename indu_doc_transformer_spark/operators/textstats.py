@@ -8,16 +8,18 @@ ANSI/DuckDB SQL so the driver's oracle can verify them value-for-value
 to 6 decimals on both sides.
 
 Exception, deliberately: the two per-document n-gram statistics
-(top_ngram_stats / dup_ngram_char_stats) default to an Arrow-batched
-kernel — the SQL form explodes O(tokens x |ns|) gram rows through two
-shuffles and interpreted higher-order gram construction for what is a
-per-row statistic (measured 22.6s + 46.4s for 10k docs at sf0.1 vs
-~2s for the kernel). The kernel emits exact integers; division and
-rounding stay in SQL, and the SQL form remains available (fast=False)
-as the parity oracle.
+(top_ngram_stats / dup_ngram_char_stats) run an Arrow-batched kernel —
+the SQL form explodes O(tokens x |ns|) gram rows through two shuffles
+and interpreted higher-order gram construction for what is a per-row
+statistic (measured 22.6s + 46.4s for 10k docs at sf0.1 vs ~2s for the
+kernel). The kernel emits exact integers; division and rounding stay in
+SQL. The explode+groupBy SQL form is the parity oracle in
+tests/parity/ngram_folds.py.
 """
 
 from __future__ import annotations
+
+import re
 
 import pandas as pd
 from pyspark.sql import Column
@@ -61,6 +63,31 @@ def punct_ratio(c: Column) -> Column:
 
 def _tokens(c: Column) -> Column:
     return F.split(F.lower(F.trim(c)), r"\s+")
+
+
+_WS_RE = re.compile(r"\s+", re.ASCII)
+
+
+def _py_tokens(text: str) -> list[str]:
+    """Python twin of ``_tokens``, the one tokenizer of the Arrow n-gram
+    kernels (decontam grams, dedup span windows, the gram-stats table):
+
+    - Spark ``trim`` strips ASCII spaces only -> ``str.strip(' ')``;
+    - java-regex ``\\s+`` == python ``re.ASCII`` ``\\s+`` (same 6-char
+      class: NBSP and em-space are not separators), leading/trailing
+      empty tokens kept on both engines;
+    - JVM ``lower()`` (en/US locale) == ``str.lower``.
+
+    Pinned against the SQL folds in tests/parity/ by the kernel parity
+    tests in tests/test_operators.py."""
+    return _WS_RE.split(text.strip(" ").lower())
+
+
+def _py_windows(toks: list[str], n: int) -> list[str]:
+    """The space-joined n-token windows of ``toks`` in order — the
+    ``array_join(slice(toks, i, n), ' ')`` of the SQL folds; none when
+    there are fewer than n tokens."""
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
 
 
 def stopword_count(c: Column, words: list[str]) -> Column:
@@ -173,67 +200,13 @@ def gopher_keep(
     )
 
 
-def top_bigram_stats(df, id_col: str, text_col: str):
-    """Gopher repetition rule: the most frequent bigram's count and its
-    fraction of all bigrams per document (high fractions flag
-    boilerplate/templated text). One explode + two aggregations —
-    shuffles on (doc, gram) then doc, no per-doc Python."""
-    toks = _tokens(F.col(text_col))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 1),
-        lambda i: F.concat(
-            F.element_at(toks, i), F.lit(" "), F.element_at(toks, i + 1)
-        ),
-    )
-    g = (
-        df.where(F.size(toks) >= 2)
-        .select(
-            F.col(id_col).alias("id"),
-            F.size(toks).cast("long").alias("total"),
-            F.explode(grams).alias("gram"),
-        )
-        .withColumn("total", F.col("total") - 1)
-    )
-    counts = g.groupBy("id", "total", "gram").agg(F.count("*").alias("cnt"))
-    return counts.groupBy("id", "total").agg(
-        F.max("cnt").alias("top_gram_count")
-    ).select(
-        F.col("id"),
-        "top_gram_count",
-        F.round(F.col("top_gram_count") / F.col("total").cast("double"), 6).alias(
-            "top_gram_frac"
-        ),
-    )
-
-
-def _gram_structs(toks: Column, ns: tuple) -> Column:
-    """Flattened array of (n, gram) structs for every n in ``ns`` —
-    the shared gram constructor for both repetition families (a change
-    here must hold for top_ngram_stats AND dup_ngram_char_stats, whose
-    oracles mirror it)."""
-    n_tok = F.size(toks)
-
-    def grams_for(n: int) -> Column:
-        return F.when(
-            n_tok >= n,
-            F.transform(
-                F.sequence(F.lit(1), n_tok - (n - 1)),
-                lambda i: F.struct(
-                    F.lit(n).alias("n"),
-                    F.array_join(F.slice(toks, i, n), " ").alias("gram"),
-                ),
-            ),
-        ).otherwise(F.expr("cast(array() as array<struct<n:int,gram:string>>)"))
-
-    return F.flatten(F.array(*[grams_for(n) for n in ns]))
-
-
 def _gram_stats_table(df, id_col: str, text_col: str, ns_top: tuple, ns_dup: tuple):
     """Arrow-batched per-document n-gram statistics: whitespace tokens
     -> (id, ntok, chars, max gram count per n in ``ns_top``,
     duplicated-gram char mass per n in ``ns_dup``) as EXACT INTEGERS —
     the fraction division and rounding stay in SQL so the kernel is
-    bit-identical to the explode+groupBy builders (parity pinned by
+    bit-identical to the explode+groupBy folds in
+    tests/parity/ngram_folds.py (parity pinned by
     tests/test_operators.py::test_gram_stats_fast_matches_sql).
 
     Why it exists: these are PER-DOCUMENT statistics, but the SQL form
@@ -249,13 +222,9 @@ def _gram_stats_table(df, id_col: str, text_col: str, ns_top: tuple, ns_dup: tup
     pushed through the projection by Catalyst, duplicating the kernel
     evaluation per consumer (the distinct_tags lesson) — a map
     OPERATOR is evaluated exactly once, with the filter above it.
-    Tokenization mirrors _tokens exactly: Spark trim strips 0x20 only,
-    Java \\s is ASCII (re.ASCII), a leading separator yields a leading
-    empty token."""
-    import re
+    Tokens and grams come from _py_tokens/_py_windows, the Python twin
+    of _tokens."""
     from typing import Iterator
-
-    ws = re.compile(r"\s+", re.ASCII)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from collections import Counter
@@ -263,31 +232,25 @@ def _gram_stats_table(df, id_col: str, text_col: str, ns_top: tuple, ns_dup: tup
         for pdf in batches:
             ntoks, chars, tops, dups = [], [], [], []
             for t in pdf["_t"]:
-                toks = ws.split((t or "").strip(" ").lower())
-                n_tok = len(toks)
-                ntoks.append(n_tok)
+                toks = _py_tokens(t or "")
+                ntoks.append(len(toks))
                 chars.append(len(" ".join(toks)))
-                top_row, dup_row = [], []
-                for n in ns_top:
-                    if n_tok >= n:
-                        c = Counter(
-                            " ".join(toks[i : i + n]) for i in range(n_tok - n + 1)
+                tops.append(
+                    [
+                        max(Counter(_py_windows(toks, n)).values(), default=0)
+                        for n in ns_top
+                    ]
+                )
+                dups.append(
+                    [
+                        sum(
+                            cnt * len(g)
+                            for g, cnt in Counter(_py_windows(toks, n)).items()
+                            if cnt > 1
                         )
-                        top_row.append(max(c.values()))
-                    else:
-                        top_row.append(0)
-                for n in ns_dup:
-                    if n_tok >= n:
-                        c = Counter(
-                            " ".join(toks[i : i + n]) for i in range(n_tok - n + 1)
-                        )
-                        dup_row.append(
-                            sum(cnt * len(g) for g, cnt in c.items() if cnt > 1)
-                        )
-                    else:
-                        dup_row.append(0)
-                tops.append(top_row)
-                dups.append(dup_row)
+                        for n in ns_dup
+                    ]
+                )
             yield pd.DataFrame(
                 {
                     "id": pdf["id"],
@@ -307,67 +270,33 @@ def _gram_stats_table(df, id_col: str, text_col: str, ns_top: tuple, ns_dup: tup
     )
 
 
-def top_ngram_stats(
-    df, id_col: str, text_col: str, ns: tuple = (2, 3, 4), fast: bool = True
-):
+def top_ngram_stats(df, id_col: str, text_col: str, ns: tuple = (2, 3, 4)):
     """Gopher repetition rules generalized: the top n-gram fraction for
     each n in ``ns`` per document.
 
-    ``fast`` (default) runs the Arrow gram-stats kernel — a map-only
-    pass, ZERO shuffles (the statistic is per-document; see
-    _gram_stats_udf for the measured 10x). ``fast=False`` keeps the
-    pure-SQL form (one explode of (n, gram) structs + two shuffles),
-    which doubles as the parity oracle for the kernel and as the
-    engine-portable reference the DuckDB oracle mirrors."""
-    if fast:
-        k = _gram_stats_table(df, id_col, text_col, tuple(ns), ()).where(
-            F.col("ntok") >= 2
-        )
-        cols = [
-            F.round(
-                F.coalesce(
-                    F.when(
-                        F.col("ntok") >= n,
-                        F.element_at(F.col("top"), i + 1)
-                        / (F.col("ntok") - (n - 1)).cast("double"),
-                    ),
-                    F.lit(0.0),
-                ),
-                6,
-            ).alias(f"top{n}_frac")
-            for i, n in enumerate(ns)
-        ]
-        return k.select("id", *cols)
-    toks = _tokens(F.col(text_col))
-    n_tok = F.size(toks)
-    all_g = _gram_structs(toks, ns)
-    g = (
-        df.where(n_tok >= 2)
-        .select(
-            F.col(id_col).alias("id"),
-            n_tok.cast("long").alias("ntok"),
-            F.explode(all_g).alias("g"),
-        )
-        .select("id", "ntok", F.col("g.n").alias("n"), F.col("g.gram").alias("gram"))
+    Runs the Arrow gram-stats kernel — a map-only pass, ZERO shuffles
+    (the statistic is per-document; see _gram_stats_table for the
+    measured 10x). The pure-SQL form (one explode of (n, gram) structs
+    + two shuffles) is its parity oracle in tests/parity/ngram_folds.py
+    and the engine-portable reference the DuckDB oracle mirrors."""
+    k = _gram_stats_table(df, id_col, text_col, tuple(ns), ()).where(
+        F.col("ntok") >= 2
     )
-    counts = g.groupBy("id", "ntok", "n", "gram").agg(F.count("*").alias("cnt"))
-    top = counts.groupBy("id", "ntok", "n").agg(F.max("cnt").alias("top_cnt"))
-    aggs = [
+    cols = [
         F.round(
             F.coalesce(
-                F.max(
-                    F.when(
-                        F.col("n") == n,
-                        F.col("top_cnt") / (F.col("ntok") - (n - 1)).cast("double"),
-                    )
+                F.when(
+                    F.col("ntok") >= n,
+                    F.element_at(F.col("top"), i + 1)
+                    / (F.col("ntok") - (n - 1)).cast("double"),
                 ),
                 F.lit(0.0),
             ),
             6,
         ).alias(f"top{n}_frac")
-        for n in ns
+        for i, n in enumerate(ns)
     ]
-    return top.groupBy("id", "ntok").agg(*aggs).drop("ntok")
+    return k.select("id", *cols)
 
 
 def repetition_keep(
@@ -379,7 +308,7 @@ def repetition_keep(
 
 
 def dup_ngram_char_stats(
-    df, id_col: str, text_col: str, ns: tuple = (5, 6, 7, 8, 9, 10), fast: bool = True
+    df, id_col: str, text_col: str, ns: tuple = (5, 6, 7, 8, 9, 10)
 ):
     """The other half of Gopher's repetition table: for each n in
     ``ns``, the fraction of (normalized) characters covered by n-grams
@@ -387,70 +316,32 @@ def dup_ngram_char_stats(
     grams, capped at 1.0 (overlapping grams overcount, same as the
     published implementations).
 
-    ``fast`` (default) = the zero-shuffle Arrow gram-stats kernel
-    (integer char masses per doc; division/cap/round in SQL — see
-    _gram_stats_udf). ``fast=False`` = the pure-SQL form (ONE explode
-    + two shuffles for all six n's), kept as the kernel's parity
-    oracle and the DuckDB-mirrorable reference."""
-    if fast:
-        k = _gram_stats_table(df, id_col, text_col, (), tuple(ns)).where(
-            F.col("ntok") >= min(ns)
-        )
-        cols = [
-            F.round(
-                F.coalesce(
-                    F.when(
-                        F.col("ntok") >= n,
-                        F.least(
-                            F.lit(1.0),
-                            F.element_at(F.col("dup"), i + 1)
-                            / F.col("chars").cast("double"),
-                        ),
-                    ),
-                    F.lit(0.0),
-                ),
-                6,
-            ).alias(f"dup{n}_frac")
-            for i, n in enumerate(ns)
-        ]
-        return k.select("id", *cols)
-    toks = _tokens(F.col(text_col))
-    n_tok = F.size(toks)
-    char_len = F.length(F.array_join(toks, " ")).cast("long")
-    g = (
-        df.where(n_tok >= min(ns))
-        .select(
-            F.col(id_col).alias("id"),
-            char_len.alias("chars"),
-            F.explode(_gram_structs(toks, ns)).alias("g"),
-        )
-        .select("id", "chars", F.col("g.n").alias("n"), F.col("g.gram").alias("gram"))
+    Runs the zero-shuffle Arrow gram-stats kernel (integer char masses
+    per doc; division/cap/round in SQL — see _gram_stats_table). The
+    pure-SQL form (ONE explode + two shuffles for all six n's) is its
+    parity oracle in tests/parity/ngram_folds.py and the
+    DuckDB-mirrorable reference."""
+    k = _gram_stats_table(df, id_col, text_col, (), tuple(ns)).where(
+        F.col("ntok") >= min(ns)
     )
-    counts = g.groupBy("id", "chars", "n", "gram").agg(F.count("*").alias("cnt"))
-    dup = counts.groupBy("id", "chars", "n").agg(
-        F.sum(
-            F.when(F.col("cnt") > 1, F.col("cnt") * F.length("gram")).otherwise(0)
-        ).alias("dup_chars")
-    )
-    aggs = [
+    cols = [
         F.round(
             F.coalesce(
-                F.max(
-                    F.when(
-                        F.col("n") == n,
-                        F.least(
-                            F.lit(1.0),
-                            F.col("dup_chars") / F.col("chars").cast("double"),
-                        ),
-                    )
+                F.when(
+                    F.col("ntok") >= n,
+                    F.least(
+                        F.lit(1.0),
+                        F.element_at(F.col("dup"), i + 1)
+                        / F.col("chars").cast("double"),
+                    ),
                 ),
                 F.lit(0.0),
             ),
             6,
         ).alias(f"dup{n}_frac")
-        for n in ns
+        for i, n in enumerate(ns)
     ]
-    return dup.groupBy("id", "chars").agg(*aggs).drop("chars")
+    return k.select("id", *cols)
 
 
 # Gopher table A1: duplicate n-gram char-fraction thresholds for n=5..10

@@ -85,13 +85,9 @@ def run_extraction(
             F.col("bucket"),
             F.col("url"),
         )
-        kernel = (
-            ex._extract_batches
-            if page_setups_json is None
-            else ex.make_extract_batches(page_setups_json)
-        )
         extracted = pruned.mapInPandas(
-            kernel, schema=ex.EXTRACTION_SCHEMA + ", bucket int"
+            ex.make_extract_batches(page_setups_json),
+            schema=ex.EXTRACTION_SCHEMA + ", bucket int",
         )
         # E3 job-level progress/counters: observed metrics ride the
         # write action, no extra pass (plugin.py:176-187 analog)

@@ -35,7 +35,7 @@ def stream_extract(
         ["url"]
     )
     extracted = deduped.select("url", "warc_ts", "html", "lang").mapInPandas(
-        ex._extract_batches, schema=ex.EXTRACTION_SCHEMA
+        ex.make_extract_batches(), schema=ex.EXTRACTION_SCHEMA
     )
     q = (
         extracted.writeStream.format("parquet")
@@ -160,7 +160,7 @@ def stream_metrics(
     streaming analog of the per-partition counter metrics."""
     src = spark.readStream.schema(CORPUS_SCHEMA).parquet(input_dir)
     extracted = src.select("url", "warc_ts", "html", "lang").mapInPandas(
-        ex._extract_batches, schema=ex.EXTRACTION_SCHEMA
+        ex.make_extract_batches(), schema=ex.EXTRACTION_SCHEMA
     )
     agg = (
         extracted.withWatermark("warc_ts", "30 minutes")

@@ -1,7 +1,7 @@
 """Pure-Python entity assembly — the God-factory oracle.
 
 Replicates the reference's factory/merge layer
-(/root/reference/src/indu_doc/god.py:237-565 create_* +
+(src/indu_doc/god.py:237-565 create_* +
 page_processor.py:107-521 handlers) over the kernel's normalized rows,
 producing the same entity sets the Spark assembly
 (operators/assembly.py) must produce. Used as the test oracle for the
@@ -14,17 +14,14 @@ sets union; xtarget type upgraded by priority CABLE>DEVICE>STRIP>OTHER
 
 from __future__ import annotations
 
-import json
 from typing import Optional
 
-from ..config import DEFAULT_ASPECTS, AspectsConfig
-from . import tagparse as tp
+from indu_doc_transformer_spark.config import DEFAULT_ASPECTS, AspectsConfig
+from indu_doc_transformer_spark.kernels import tagparse as tp
+from indu_doc_transformer_spark.kernels.layout import extract_document
+from indu_doc_transformer_spark.operators.sqlite_sink import _jdump
 
 TYPE_PRIORITY = {"cable": 3, "device": 2, "strip": 1, "other": 0}
-
-
-def _jdump(obj) -> str:
-    return json.dumps(obj, separators=(",", ":"), ensure_ascii=False, sort_keys=True)
 
 
 class Assembly:
@@ -439,8 +436,6 @@ class Assembly:
 
 def assemble_documents(docs: list[dict], config: AspectsConfig = DEFAULT_ASPECTS) -> Assembly:
     """Run extraction + assembly over raw corpus docs (test oracle)."""
-    from .layout import extract_document
-
     asm = Assembly(config)
     for d in docs:
         r = extract_document(d["html"])

@@ -1,15 +1,16 @@
 """Distributed assembly vs the pure-Python God-factory oracle.
 
 Every entity table produced by operators/assembly.py must be
-set-identical to kernels/assemble.py (which encodes the reference's
-factory semantics, pinned by golden GUID tests)."""
+set-identical to the oracle in tests/oracles/god_factory.py (which
+encodes the reference's factory semantics, pinned by golden GUID
+tests)."""
 
 import pytest
 
-from indu_doc_transformer_spark.kernels.assemble import assemble_documents
 from indu_doc_transformer_spark.operators import assembly as asm_op
 from indu_doc_transformer_spark.operators import extraction as ex
 from indu_doc_transformer_spark.sources.corpus import corpus_df, generate_corpus
+from oracles.god_factory import Assembly, assemble_documents
 
 N_DOCS = 150
 
@@ -117,7 +118,6 @@ def test_invalid_tag_path_parity(spark):
     (god.py:288-299) must match the oracle."""
     from pyspark.sql import Row
 
-    from indu_doc_transformer_spark.kernels.assemble import Assembly
     from indu_doc_transformer_spark.kernels.layout import extract_document
     from indu_doc_transformer_spark.sources.corpus import CORPUS_SCHEMA, generate_doc
 

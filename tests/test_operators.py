@@ -166,11 +166,24 @@ def test_ann_bruteforce_norm_precompute_parity(spark):
     assert a == b and any("nan" in x[3] for x in a)
 
 
-def test_decontam_gram_kernel_matches_sql(spark):
-    """fast=True (Arrow gram kernel) must reproduce the fast=False
-    interpreted-SQL form exactly — including NULL text, empty text,
-    whitespace-only text, leading/trailing separators, tabs/newlines,
-    non-ASCII, and docs shorter than n."""
+# tokenizer rows shared by the three n-gram kernel parity tests: JVM
+# lower() (en/US) vs Python str.lower on dotted/dotless I, final sigma,
+# titlecase digraphs and capital sharp s; NBSP and em-space are not
+# separators on either side
+NON_ASCII_ROWS = [
+    "İSTANBUL ıi KIŞ ΟΔΟΣ ΣΟΦΟΣ a b c İ İ İ",
+    "ǅemal ﬁx STRASSE ẞ İ I a b c",
+    "\xa0nbsp\u2003em a b c d",
+]
+
+
+def test_decontam_gram_kernel_matches_sql(spark, monkeypatch):
+    """The Arrow gram kernel must reproduce the interpreted-SQL fold
+    (tests/parity/ngram_folds.distinct_grams) exactly — including NULL
+    text, empty text, whitespace-only text, leading/trailing
+    separators, tabs/newlines, non-ASCII, and docs shorter than n."""
+    from parity.ngram_folds import distinct_grams
+
     from indu_doc_transformer_spark.operators import decontam as dc
 
     rows = [
@@ -184,35 +197,42 @@ def test_decontam_gram_kernel_matches_sql(spark):
         (7, "ÅÄÖ Straße the quick BROWN fox Über alles here"),
         (8, "a b c d a b c d a b c d"),
         (9, "x" * 50 + " y z w v u t s"),
-    ]
+    ] + [(10 + i, t) for i, t in enumerate(NON_ASCII_ROWS)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     train = df.where(F.col("doc_id") % 2 == 0)
     bench = df.where(F.col("doc_id") % 2 == 1)
+
+    def contamination(n):
+        return {
+            tuple(r)
+            for r in dc.ngram_contamination(
+                train, bench, "doc_id", "text", n=n
+            ).collect()
+        }
+
+    kernel_out = {n: contamination(n) for n in (2, 4)}
+    # the same operator with the SQL fold in place of the kernel
+    monkeypatch.setattr(
+        dc, "_distinct_grams_udf", lambda n: (lambda c: distinct_grams(c, n))
+    )
     for n in (2, 4):
-        a = {
-            tuple(r)
-            for r in dc.ngram_contamination(
-                train, bench, "doc_id", "text", n=n, fast=True
-            ).collect()
-        }
-        b = {
-            tuple(r)
-            for r in dc.ngram_contamination(
-                train, bench, "doc_id", "text", n=n, fast=False
-            ).collect()
-        }
-        assert a == b
+        assert kernel_out[n] == contamination(n)
+    monkeypatch.undo()
     # gram arrays themselves bit-identical (order + values)
-    k = dc._distinct_grams_udf(3)(F.col("text"))
-    s = dc._distinct_grams(F.col("text"), 3)
-    pairs = df.select(k.alias("a"), s.alias("b")).collect()
-    assert all(list(r.a) == list(r.b) for r in pairs)
+    for n in (2, 3, 4):
+        k = dc._distinct_grams_udf(n)(F.col("text"))
+        s = distinct_grams(F.col("text"), n)
+        pairs = df.select(k.alias("a"), s.alias("b")).collect()
+        assert all(list(r.a) == list(r.b) for r in pairs)
 
 
-def test_span_window_kernel_matches_sql(spark):
-    """duplicate_span_removal fast=True (Arrow window-hash kernel) must
-    reproduce the fast=False SQL fold exactly — nulls, whitespace-only,
-    short docs, repeated boilerplate, non-ASCII."""
+def test_span_window_kernel_matches_sql(spark, monkeypatch):
+    """duplicate_span_removal's Arrow window-hash kernel must reproduce
+    the SQL fold (tests/parity/ngram_folds.span_windows) exactly —
+    nulls, whitespace-only, short docs, repeated boilerplate,
+    non-ASCII."""
+    from parity.ngram_folds import span_windows
+
     rows = [
         (0, "a b c d e f g a b c d e f g tail one two"),
         (1, "a b c d e f g prefix a b c d e f g"),
@@ -222,22 +242,32 @@ def test_span_window_kernel_matches_sql(spark):
         (5, "one two three"),
         (6, "ÅÄÖ ü ü ü ü ü ü ü ü ss"),
         (7, "  leading and trailing  "),
-    ]
+    ] + [(8 + i, t) for i, t in enumerate(NON_ASCII_ROWS)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    for k in (3, 7):
-        a = {
+
+    def removal(k):
+        return {
             tuple(r)
-            for r in dd.duplicate_span_removal(
-                df, "doc_id", "text", k=k, fast=True
-            ).collect()
+            for r in dd.duplicate_span_removal(df, "doc_id", "text", k=k).collect()
         }
-        b = {
-            tuple(r)
-            for r in dd.duplicate_span_removal(
-                df, "doc_id", "text", k=k, fast=False
-            ).collect()
-        }
-        assert a == b
+
+    ks = (2, 3, 7)
+    kernel_out = {k: removal(k) for k in ks}
+    # the same operator with the SQL fold in place of the kernel
+    monkeypatch.setattr(
+        dd, "_span_windows_udf", lambda k: (lambda c: span_windows(c, k))
+    )
+    for k in ks:
+        assert kernel_out[k] == removal(k)
+    monkeypatch.undo()
+    # window arrays themselves bit-identical (order + values)
+    for k in ks:
+        a = dd._span_windows_udf(k)(F.col("text"))
+        b = span_windows(F.col("text"), k)
+        pairs = df.select(a.alias("a"), b.alias("b")).collect()
+        assert all(
+            [tuple(w) for w in r.a] == [tuple(w) for w in r.b] for r in pairs
+        )
 
 
 def test_guid_charjoin_matches_charjoin_on_guid_inputs(spark):
@@ -1092,10 +1122,13 @@ def test_decontamination_broadcast_gate_degrades_gracefully(spark):
 
 def test_gram_stats_fast_matches_sql(spark):
     """The Arrow gram-stats kernel must be bit-identical to the
-    explode+groupBy SQL form — adversarial tokenization cases: null,
-    empty, single token, tabs/newlines (Spark trim strips 0x20 only,
-    so a leading tab yields a leading empty token), unicode case
-    folding, heavy repetition, punctuation-glued tokens."""
+    explode+groupBy SQL form in tests/parity/ngram_folds.py —
+    adversarial tokenization cases: null, empty, single token,
+    tabs/newlines (Spark trim strips 0x20 only, so a leading tab yields
+    a leading empty token), unicode case folding, heavy repetition,
+    punctuation-glued tokens."""
+    from parity import ngram_folds as sql
+
     from indu_doc_transformer_spark.operators import textstats as ts
 
     rows = [
@@ -1108,17 +1141,14 @@ def test_gram_stats_fast_matches_sql(spark):
         (6, "für straße unicode tokens repeated für straße unicode tokens repeated"),
         (7, "p! q? r. s, " * 5),
         (8, "  spaces   collapse    here between   tokens   "),
-    ]
+    ] + [(9 + i, t) for i, t in enumerate(NON_ASCII_ROWS)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for fn in (ts.top_ngram_stats, ts.dup_ngram_char_stats):
-        fast = {
-            r.id: tuple(r)[1:]
-            for r in fn(df, "doc_id", "text", fast=True).collect()
-        }
-        slow = {
-            r.id: tuple(r)[1:]
-            for r in fn(df, "doc_id", "text", fast=False).collect()
-        }
+    for fn, ref in (
+        (ts.top_ngram_stats, sql.top_ngram_stats),
+        (ts.dup_ngram_char_stats, sql.dup_ngram_char_stats),
+    ):
+        fast = {r.id: tuple(r)[1:] for r in fn(df, "doc_id", "text").collect()}
+        slow = {r.id: tuple(r)[1:] for r in ref(df, "doc_id", "text").collect()}
         assert fast == slow, fn.__name__
 
 
