@@ -989,12 +989,12 @@ def q_pii_scrub(spark, sf_dir):
 
 
 def q_token_shards(spark, sf_dir):
-    """Training-shard packing via the SCALABLE two-pass prefix sum
+    """Training-shard packing via the distributed two-pass prefix sum
     (parallel per-partition windows + broadcast subtotal offsets,
-    textstats.token_shards_scalable) — value-identical to the
-    single-window SQL oracle for any partition bounds."""
+    textstats.token_shards) — value-identical to the single-window SQL
+    oracle for any partition bounds."""
     d = _t(spark, sf_dir, "documents")
-    return ts.token_shards_scalable(d, "doc_id", "text", 2000).withColumnRenamed(
+    return ts.token_shards(d, "doc_id", "text", 2000).withColumnRenamed(
         "id", "doc_id"
     )
 
@@ -1343,7 +1343,7 @@ def q_curation_funnel(spark, sf_dir):
 
 def q_minhash_signature(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    sig = dd.minhash_signature(dd.word_shingles(F.col("text"), 3), 16)
+    sig = dd._shingle_sig_udf(16, 3)(F.col("text")).sig
     return d.select("doc_id", F.array_join(sig, ",").alias("sig"))
 
 
@@ -1357,7 +1357,7 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 def q_ngram_jaccard(spark, sf_dir):
     """Adjacent-doc 3-gram Jaccard (bounded pairwise check)."""
     d = _t(spark, sf_dir, "documents").select(
-        "doc_id", dd.word_shingles(F.col("text"), 3).alias("sh")
+        "doc_id", dd._shingle_sig_udf(16, 3)(F.col("text")).sh.alias("sh")
     )
     b = d.select(
         (F.col("doc_id") - 1).alias("doc_id"), F.col("sh").alias("sh_next")
@@ -1371,8 +1371,11 @@ def q_ngram_jaccard(spark, sf_dir):
 
 
 def q_simhash(spark, sf_dir):
+    """SimHash-64 fingerprints of the first 100 docs (the Arrow kernel
+    dedup._simhash_udf); the oracle is the interpreted nibble-vote
+    fold."""
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
-    return d.select("doc_id", dd.simhash64(F.col("text")).alias("simhash"))
+    return d.select("doc_id", dd._simhash_udf()(F.col("text")).alias("simhash"))
 
 
 def q_simhash_neardup(spark, sf_dir):
@@ -1399,9 +1402,9 @@ def q_ann_ivf(spark, sf_dir):
 
 def q_neardup_keep_list(spark, sf_dir):
     """The standard 100-TB dedup ending oracled end-to-end: MinHash-LSH
-    pairs -> connected components (iterative min-label propagation, no
-    driver state) -> one survivor per cluster. DuckDB oracle: the same
-    pairs SQL + a recursive reachability CTE."""
+    pairs -> connected components (large-star/small-star contraction,
+    O(log n) rounds) -> one survivor per cluster. DuckDB oracle: the
+    same pairs SQL + a recursive reachability CTE."""
     d = _t(spark, sf_dir, "documents")
     return dd.near_dup_keep_list(
         d, "doc_id", "text", num_hashes=16, bands=4, threshold=0.5
@@ -1673,7 +1676,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_connection_guid": q_connection_guid,  # char-exploded hash ⊂ q_connections_from_rows
         "q_multisignal_keep_list": q_multisignal_keep_list,  # lex ∪ sem edges ⊂ recorded pair families
         "q_fingerprint": q_fingerprint,  # md5-uuid ⊂ every from_rows hash
-        "q_simhash": q_simhash,  # signature SQL ⊂ q_simhash_neardup_banded
+        "q_simhash": q_simhash,  # signature kernel ⊂ q_simhash_neardup_banded
         "q_region_volume": q_region_volume,  # broadcast-chain ⊂ q_top_orders + plan test
         "q_exact_dedup": q_exact_dedup,  # ⊂ q_dedup_keep_list
         "q_minhash_signature": q_minhash_signature,  # pinned inside q_minhash_lsh_pairs

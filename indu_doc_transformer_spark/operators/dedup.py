@@ -13,6 +13,9 @@ Scale design:
 
 Everything is deterministic (md5-based hashes, lexicographic string
 mins) and exactly mirrorable in DuckDB SQL for the driver's oracle.
+The MinHash and SimHash signatures run only as Arrow kernels; their
+interpreted-SQL folds are the parity references in
+tests/parity/dedup_folds.py.
 """
 
 from __future__ import annotations
@@ -22,33 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.cache import register_cache
-from .textstats import _py_tokens, _py_windows, _tokens, norm_text
-
-
-def word_shingles(c: Column, k: int = 3) -> Column:
-    """Distinct word k-grams of the normalized text."""
-    toks = F.split(norm_text(c), " ")
-    n = F.size(toks)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-            lambda i: F.array_join(F.slice(toks, i, k), " "),
-        )
-    )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """K lexicographic-min md5 hashes; string min is portable across
-    engines (no hex->int conversion needed)."""
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(num_hashes)),
-        lambda seed: F.array_min(
-            F.transform(
-                shingles,
-                lambda s: F.md5(F.concat(seed.cast("string"), F.lit(":"), s)),
-            )
-        ),
-    )
+from .textstats import _py_norm, _py_tokens, _py_windows, _tokens, norm_text
 
 
 def lsh_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
@@ -78,17 +55,20 @@ def jaccard(a: Column, b: Column) -> Column:
 
 
 def _shingle_sig_udf(num_hashes: int, k: int):
-    """Arrow-batched kernel computing (shingles, minhash signature) —
-    bit-identical to the SQL builders above (same normalization, same
-    md5-hex lexicographic mins) but ~10x faster than interpreted
-    higher-order expressions. Parity is pinned by
+    """Arrow-batched kernel computing (shingles, minhash signature):
+    the distinct word k-grams of the normalized text (textstats._py_norm,
+    split on single spaces, one shingle for docs shorter than k) and
+    ``num_hashes`` lexicographic-min md5 hex digests of
+    ``"{seed}:" + shingle``; string min is portable across engines.
+    NULL text is hashed as ``''``. On non-NULL text, bit-identical to
+    the interpreted SQL fold
+    tests/parity/dedup_folds.word_shingles/minhash_signature (the shape
+    the DuckDB oracle mirrors), pinned by
     tests/test_operators.py::test_minhash_fast_matches_sql."""
     import hashlib
-    import re
 
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-    ws = re.compile(r"\s+", re.ASCII)
     schema = StructType(
         [
             StructField("sh", ArrayType(StringType())),
@@ -110,8 +90,7 @@ def _shingle_sig_udf(num_hashes: int, k: int):
         seed_bases = [hashlib.md5(p) for p in prefixes]
         shs, sigs = [], []
         for t in texts:
-            norm = ws.sub(" ", t or "").strip().lower()
-            toks = norm.split(" ")
+            toks = _py_norm(t or "").split(" ")
             n = max(len(toks) - (k - 1), 1)
             sh = list(dict.fromkeys(" ".join(toks[i : i + k]) for i in range(n)))
             sbytes = [s.encode() for s in sh]
@@ -216,73 +195,25 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash64(c: Column) -> Column:
-    """64-bit SimHash of the distinct whitespace tokens, as a 16-hex
-    string. Bit p comes from nibble p/4 of each token's md5; the bit
-    votes +1/-1 and the sign of the sum sets the output bit.
-
-    Portable formula: nibble value = strpos('0123456789abcdef', ch)-1
-    (same expression works in DuckDB)."""
-    toks = F.array_distinct(F.split(norm_text(c), " "))
-    hexes = F.transform(toks, lambda t: F.md5(t))
-
-    def bit_sum(p):
-        # p: Column 0..63; nibble index p/4 (1-based substr), bit 3-p%4
-        nib_idx = (p / 4).cast("int") + 1
-        shift_pow = F.pow(F.lit(2.0), (F.lit(3) - (p % 4)).cast("double")).cast("int")
-
-        def vote(acc, h):
-            nib = (
-                F.instr(F.lit("0123456789abcdef"), F.substring(h, nib_idx, 1)) - 1
-            ).cast("int")
-            bit_on = ((nib / shift_pow).cast("int") % 2) == 1
-            return acc + F.when(bit_on, 1).otherwise(-1)
-
-        return F.aggregate(hexes, F.lit(0), vote)
-
-    bits = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda p: F.when(bit_sum(p) > 0, F.lit(1)).otherwise(F.lit(0)),
-    )
-    # reassemble 16 hex chars from 4-bit groups
-    return F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(15)),
-            lambda g: F.substring(
-                F.lit("0123456789abcdef"),
-                (
-                    F.element_at(bits, (g * 4 + 1).cast("int")) * 8
-                    + F.element_at(bits, (g * 4 + 2).cast("int")) * 4
-                    + F.element_at(bits, (g * 4 + 3).cast("int")) * 2
-                    + F.element_at(bits, (g * 4 + 4).cast("int"))
-                    + 1
-                ).cast("int"),
-                1,
-            ),
-        ),
-        "",
-    )
-
-
 def _simhash_udf():
-    """Arrow-batched SimHash-64 kernel, bit-identical to the
-    ``simhash64`` SQL formulation (same normalization, distinct
-    whitespace tokens, md5-nibble votes) but ~10-100x faster than the
-    interpreted higher-order expression. Parity pinned by
+    """Arrow-batched SimHash-64 kernel: a 16-hex fingerprint of the
+    distinct single-space tokens of the normalized text
+    (textstats._py_norm). Bit p comes from nibble p/4 of each token's
+    md5; the bit votes +1/-1 and the sign of the sum sets the output
+    bit. NULL text is hashed as ``''``. On non-NULL text,
+    bit-identical to the interpreted SQL fold
+    tests/parity/dedup_folds.simhash64 (the shape the DuckDB oracle
+    mirrors), pinned by
     tests/test_operators.py::test_simhash_fast_matches_sql."""
     import hashlib
-    import re
 
     from pyspark.sql.types import StringType
-
-    ws = re.compile(r"\s+", re.ASCII)
 
     @F.pandas_udf(StringType())
     def kernel(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
-            norm = ws.sub(" ", t or "").strip().lower()
-            toks = list(dict.fromkeys(norm.split(" ")))
+            toks = list(dict.fromkeys(_py_norm(t or "").split(" ")))
             votes = [0] * 64
             for tok in toks:
                 h = hashlib.md5(tok.encode()).hexdigest()
@@ -360,7 +291,7 @@ def simhash_near_dup_pairs(
 def _release_local_checkpoint(df: DataFrame) -> None:
     """Best-effort release of a localCheckpoint'ed DataFrame's cached
     RDD blocks. Without this, an iterative loop holds O(iterations)
-    checkpointed label-table copies in executor storage until JVM GC +
+    checkpointed edge-table copies in executor storage until JVM GC +
     ContextCleaner get around to them. Reaches through the LogicalRDD
     plan node (pinned pyspark build); a harmless no-op if the
     internals move — the blocks then just wait for context cleanup as
@@ -372,81 +303,14 @@ def _release_local_checkpoint(df: DataFrame) -> None:
 
 
 def connected_components(
-    edges: DataFrame, src: str = "id_a", dst: str = "id_b", max_iters: int = 25
-) -> DataFrame:
-    """Connected components over an undirected edge list by iterative
-    min-label propagation: every node's label converges to the smallest
-    id reachable from it. Returns (id, component).
-
-    Scale design: each iteration is ONE equi-join on the symmetrized
-    edges plus a groupBy — no driver state beyond the converged-yet
-    counter (the standard Pregel-style control loop; GraphX does the
-    same). Labels are localCheckpoint'ed per iteration so plan lineage
-    stays flat, and the PREVIOUS iteration's checkpoint blocks are
-    released as soon as the new one is materialized, so the loop holds
-    at most two label generations in executor storage. Converges in
-    graph-diameter iterations; near-dup clusters are shallow
-    (pairs/small cliques), so 2-4 rounds in practice.
-
-    Cost note for 100 TB: the convergence check is a full count() job
-    over the label table every iteration — that is the price of early
-    exit, and with diameter 2-4 it is 2-4 cheap scans of an id/label
-    table. For adversarial long-chain graphs (diameter ~ n) the right
-    move is not to tune the check cadence but to switch to
-    ``connected_components_star`` (large-star/small-star contraction,
-    O(log n) rounds; equivalence + chain tests in
-    tests/test_operators.py).
-    """
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    )
-    sym = sym.localCheckpoint(eager=True)  # edges are re-joined every round
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    prev = labels
-    for _i in range(max_iters):
-        neigh = (
-            sym.join(labels, sym["b"] == labels["id"])
-            .groupBy("a")
-            .agg(F.min("comp").alias("ncomp"))
-        )
-        new = (
-            labels.join(neigh, labels["id"] == neigh["a"], "left")
-            .select(
-                "id",
-                F.least(F.col("comp"), F.coalesce("ncomp", F.col("comp"))).alias(
-                    "ncomp2"
-                ),
-                "comp",
-            )
-        )
-        new = new.localCheckpoint(eager=True)
-        changed = new.where(F.col("ncomp2") != F.col("comp")).count()
-        _release_local_checkpoint(prev)  # new is materialized; prev is dead
-        prev = new
-        labels = new.select("id", F.col("ncomp2").alias("comp"))
-        if changed == 0:
-            break
-    else:  # pragma: no cover - diameter > max_iters
-        raise RuntimeError(f"connected_components: no convergence in {max_iters} iters")
-    _release_local_checkpoint(sym)
-    return labels
-
-
-def connected_components_star(
     edges: DataFrame, src: str = "id_a", dst: str = "id_b", max_iters: int = 50
 ) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (the MapReduce CC algorithm of Kiveris et al.,
-    'Connected Components in MapReduce and Beyond'): converges in
-    O(log n) rounds even on adversarial long-chain graphs, where the
-    min-label propagation of ``connected_components`` needs
-    O(diameter) rounds. Same contract: (id, component) with component
-    = the smallest id in the cluster; only edge endpoints appear.
+    """Connected components over an undirected edge list by alternating
+    large-star / small-star contraction (the MapReduce CC algorithm of
+    Kiveris et al., 'Connected Components in MapReduce and Beyond'):
+    converges in O(log n) rounds on every graph, adversarial long
+    chains included. Returns (id, comp) with comp = the smallest id in
+    the cluster; only edge endpoints appear.
 
     Scale design: each star round is ONE aggregate (min neighbor per
     node — map-side partial combine, so a celebrity hub folds locally)
@@ -454,14 +318,11 @@ def connected_components_star(
     a distinct to keep the edge set canonical. No collect_list of
     neighborhoods anywhere — a hub node never materializes its
     adjacency in a single row. Edge tables are localCheckpoint'ed per
-    round and the previous generation's blocks are released, as in
-    ``connected_components``.
-
-    Use this instead of ``connected_components`` when cluster diameter
-    is unbounded (e.g. transitive-closure chains from aggressive
-    thresholds); for ordinary near-dup workloads (diameter 2-4) the
-    propagation loop runs fewer jobs per round and is the default in
-    ``keep_list_from_edges``."""
+    round so plan lineage stays flat, and the previous generation's
+    blocks are released as soon as the new one is materialized, so the
+    loop holds at most two edge generations in executor storage. The
+    convergence check is one count + bit_xor checksum job over the
+    edge table per round."""
 
     def canonical(e: DataFrame) -> DataFrame:
         return (
@@ -517,7 +378,7 @@ def connected_components_star(
             break
         sig = sig2
     else:  # pragma: no cover - pathological non-convergence
-        raise RuntimeError(f"connected_components_star: no convergence in {max_iters}")
+        raise RuntimeError(f"connected_components: no convergence in {max_iters}")
     # converged: every edge is (node, root-of-component)
     return (
         e.select(F.col("u").alias("id"), F.col("v").alias("comp"))
@@ -546,16 +407,11 @@ def near_dup_keep_list(
     return keep_list_from_edges(df.select(id_col), pairs)
 
 
-def keep_list_from_edges(
-    ids: DataFrame, edges: DataFrame, algorithm: str = "propagation"
-) -> DataFrame:
+def keep_list_from_edges(ids: DataFrame, edges: DataFrame) -> DataFrame:
     """Survivor ids given near-dup edges from ANY signal (or a union of
     signals): connected components over the edges, keep the min id per
     cluster plus every unpaired id. ``ids`` is a one-column frame;
     ``edges`` carries (id_a, id_b) over the same id space.
-    ``algorithm``: 'propagation' (default — fewest jobs at near-dup
-    diameters) or 'star' (large-star/small-star, for unbounded-chain
-    edge sets).
 
     The component table is clamped to ``ids`` before picking each
     cluster's representative: if an edge endpoint is NOT in ``ids``
@@ -565,8 +421,7 @@ def keep_list_from_edges(
     contract) the clamp is a no-op and the output is unchanged."""
     id_col = ids.columns[0]
     idn = ids.select(F.col(id_col).alias("id"))
-    cc = connected_components_star if algorithm == "star" else connected_components
-    comp = cc(edges, "id_a", "id_b").join(idn, "id", "left_semi")
+    comp = connected_components(edges, "id_a", "id_b").join(idn, "id", "left_semi")
     rep = comp.groupBy("comp").agg(F.min("id").alias("rep"))
     drop = comp.join(rep, "comp").where(F.col("id") != F.col("rep")).select("id")
     return idn.join(drop, "id", "left_anti").select(F.col("id").alias(id_col))

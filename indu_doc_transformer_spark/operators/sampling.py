@@ -86,7 +86,7 @@ def training_mixture(
     deterministic per-source Bernoulli sampling at the mixture weights
     (stratified_sample: md5 buckets, identical survivors on every
     engine/run/cluster size), then fixed-token-budget shard packing of
-    the survivors in id order (token_shards_scalable: the distributed
+    the survivors in id order (textstats.token_shards: the distributed
     prefix sum — per-partition subtotals broadcast as offsets, docs
     never split). Returns (id, source, n_tokens, shard_id).
 
@@ -94,7 +94,7 @@ def training_mixture(
     bounded collect, one row per partition), so building this plan
     runs jobs — it is an output-producing composition, not a lazy
     operator."""
-    from .textstats import token_shards_scalable
+    from .textstats import token_shards
 
     s = stratified_sample(df, id_col, source_col, rates_pct, default_pct)
     keep_ids = s.where(F.col("keep") == 1).select("id")
@@ -105,7 +105,7 @@ def training_mixture(
             F.col(source_col).alias("source"),
         ).join(keep_ids, "id")
     )
-    shards = token_shards_scalable(survivors, "id", "_t", tokens_per_shard)
+    shards = token_shards(survivors, "id", "_t", tokens_per_shard)
     return shards.join(survivors.select("id", "source"), "id").select(
         "id", "source", "n_tokens", "shard_id"
     )

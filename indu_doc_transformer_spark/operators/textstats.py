@@ -68,6 +68,15 @@ def _tokens(c: Column) -> Column:
 _WS_RE = re.compile(r"\s+", re.ASCII)
 
 
+def _py_norm(text: str) -> str:
+    """Python twin of ``norm_text``, the normalization of the MinHash
+    and SimHash kernels: java-regex ``\\s+`` runs (``re.ASCII``) become
+    one space, then Spark ``trim`` strips ASCII spaces only ->
+    ``str.strip(' ')`` (a bare ``strip()`` would also drop NBSP,
+    em-space and ``\\x1c`` at the ends), then ``lower()``."""
+    return _WS_RE.sub(" ", text).strip(" ").lower()
+
+
 def _py_tokens(text: str) -> list[str]:
     """Python twin of ``_tokens``, the one tokenizer of the Arrow n-gram
     kernels (decontam grams, dedup span windows, the gram-stats table):
@@ -468,53 +477,23 @@ def unigram_rarity(df, id_col: str, text_col: str, scale: int = 1000):
     )
 
 
-def token_shards(df, id_col: str, text_col: str, tokens_per_shard: int):
-    """Assign documents to fixed-token-budget training shards: docs are
-    laid out in id order and a shard boundary falls every
-    ``tokens_per_shard`` whitespace tokens (shard = floor of the
-    running token count BEFORE the doc / budget — a doc never splits).
+def _token_starts(counts, partitions: int = 0):
+    """Distributed exclusive prefix sum over ``counts`` (id, n_tokens):
+    returns (id, n_tokens, _start) with _start = the tokens of every
+    doc before this one in id order.
 
-    Scale note: the global running sum is one window over the id
-    ordering. At 100 TB you'd range-partition by id first (Spark's
-    window on an unpartitioned frame funnels through one task); the
-    two-pass variant — per-partition subtotals broadcast as offsets —
-    keeps the same output contract. The demonstrator uses the direct
-    window; the contract (deterministic id-ordered packing) is what the
-    oracle pins."""
-    from pyspark.sql import Window
-
-    n = ws_token_count(F.col(text_col)).cast("long")
-    w = (
-        Window.orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum(n).over(w)
-    return df.select(
-        F.col(id_col).alias("id"),
-        n.alias("n_tokens"),
-        F.floor((cum - n) / tokens_per_shard).cast("long").alias("shard_id"),
-    )
-
-
-def token_shards_scalable(
-    df, id_col: str, text_col: str, tokens_per_shard: int, partitions: int = 0
-):
-    """The 100-TB variant of ``token_shards``: a distributed prefix sum.
-    Range-partition by id (range partitioner keeps partition ids in key
-    order), compute per-partition running sums in PARALLEL windows,
+    Range-partition by id (the range partitioner keeps partition ids in
+    key order), compute per-partition running sums in PARALLEL windows,
     collect only the per-partition subtotals (one row per partition —
-    bounded by cluster size, not data size), and broadcast them back as
-    offsets. Output is identical to the single-window version for any
-    partition bounds."""
+    bounded by cluster size, not data size) and broadcast them back as
+    offsets. Never one global window task; the output does not depend
+    on the partition bounds. ``partitions`` defaults to
+    defaultParallelism."""
     from pyspark.sql import Window
 
-    spark = df.sparkSession
-    p = partitions or spark.sparkContext.defaultParallelism
-    n = ws_token_count(F.col(text_col)).cast("long")
-    base = (
-        df.select(F.col(id_col).alias("id"), n.alias("n_tokens"))
-        .repartitionByRange(p, F.col("id"))
-        .withColumn("_pid", F.spark_partition_id())
+    p = partitions or counts.sparkSession.sparkContext.defaultParallelism
+    base = counts.repartitionByRange(p, F.col("id")).withColumn(
+        "_pid", F.spark_partition_id()
     )
     w = Window.partitionBy("_pid").orderBy("id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -532,12 +511,29 @@ def token_shards_scalable(
     return base.select(
         "id",
         "n_tokens",
-        F.floor(
-            (F.col("_cum") - F.col("n_tokens") + off_map[F.col("_pid")])
-            / tokens_per_shard
-        )
-        .cast("long")
-        .alias("shard_id"),
+        (F.col("_cum") - F.col("n_tokens") + off_map[F.col("_pid")]).alias("_start"),
+    )
+
+
+def token_shards(
+    df, id_col: str, text_col: str, tokens_per_shard: int, partitions: int = 0
+):
+    """Assign documents to fixed-token-budget training shards: docs are
+    laid out in id order and a shard boundary falls every
+    ``tokens_per_shard`` whitespace tokens (shard = floor of the
+    running token count BEFORE the doc / budget — a doc never splits).
+    Returns (id, n_tokens, shard_id).
+
+    The running count is the distributed prefix sum of
+    ``_token_starts``, so building this plan runs jobs (a checkpoint
+    and a cluster-sized collect). The contract (deterministic
+    id-ordered packing) is what the oracle's single-window SQL pins."""
+    n = ws_token_count(F.col(text_col)).cast("long")
+    counts = df.select(F.col(id_col).alias("id"), n.alias("n_tokens"))
+    return _token_starts(counts, partitions).select(
+        "id",
+        "n_tokens",
+        F.floor(F.col("_start") / tokens_per_shard).cast("long").alias("shard_id"),
     )
 
 
@@ -553,35 +549,17 @@ def sequence_pack(df, id_col: str, text_col: str, seq_len: int, partitions: int 
     semantics: an empty string is one token, matching the oracle
     engine); docs with no tokens (NULL text) emit nothing.
 
-    Scale shape: the same distributed prefix sum as
-    ``token_shards_scalable`` (parallel per-partition windows +
-    broadcast cluster-sized subtotal offsets — never one global window
-    task), then a native sequence() explode: a doc spanning k
-    sequences emits k rows, no Python anywhere."""
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    p = partitions or spark.sparkContext.defaultParallelism
+    Scale shape: the same distributed prefix sum as ``token_shards``
+    (``_token_starts``: parallel per-partition windows + broadcast
+    cluster-sized subtotal offsets — never one global window task),
+    then a native sequence() explode: a doc spanning k sequences emits
+    k rows, no Python anywhere."""
     n = ws_token_count(F.col(text_col)).cast("long")
-    base = (
-        df.select(F.col(id_col).alias("id"), n.alias("n_tokens"))
-        .where(F.col("n_tokens") > 0)
-        .repartitionByRange(p, F.col("id"))
-        .withColumn("_pid", F.spark_partition_id())
+    counts = df.select(F.col(id_col).alias("id"), n.alias("n_tokens")).where(
+        F.col("n_tokens") > 0
     )
-    w = Window.partitionBy("_pid").orderBy("id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    base = base.withColumn("_cum", F.sum("n_tokens").over(w)).localCheckpoint()
-    totals = base.groupBy("_pid").agg(F.sum("n_tokens").alias("t")).collect()
-    acc, offsets = 0, {}
-    for r in sorted(totals, key=lambda r: r._pid):
-        offsets[int(r._pid)] = acc
-        acc += r.t
-    off_map = F.create_map(
-        *[x for pid, o in offsets.items() for x in (F.lit(pid), F.lit(o))]
-    )
-    start = F.col("_cum") - F.col("n_tokens") + off_map[F.col("_pid")]
+    base = _token_starts(counts, partitions)
+    start = F.col("_start")
     seqd = base.select(
         "id",
         "n_tokens",
@@ -652,25 +630,22 @@ def corpus_report(
     )
 
 
-def shard_manifest(
-    df, id_col: str, text_col: str, tokens_per_shard: int, assign=None
-):
+def shard_manifest(df, id_col: str, text_col: str, tokens_per_shard: int):
     """Per-shard release manifest — the artifact a training-data drop
     ships next to its shards: (shard_id, n_docs, n_tokens, first_id,
     last_id, content_hash). content_hash is an order-insensitive
     ``bit_xor`` of a 60-bit md5 prefix over (id, text) pairs: bit_xor,
     not sum (summing 64-bit hashes overflows under ANSI — the
-    connected_components_star lesson), and 60 bits so the value stays
-    in signed-64 range on every engine (the DuckDB oracle computes the
-    identical hex-prefix cast). Verifying a delivered shard = re-xor
-    its rows and compare one number.
+    dedup.connected_components checksum lesson), and 60 bits so the
+    value stays in signed-64 range on every engine (the DuckDB oracle
+    computes the identical hex-prefix cast). Verifying a delivered
+    shard = re-xor its rows and compare one number.
 
-    ``assign`` is the shard-assignment operator — ``token_shards``
-    (default) or ``token_shards_scalable`` for 100 TB — so the pinned
-    packing formula lives in exactly ONE place; the per-row content
-    hash joins back on id (id-keyed equi-join, scale-safe), then ONE
-    aggregation with map-side combine."""
-    shards = (assign or token_shards)(df, id_col, text_col, tokens_per_shard)
+    Shards come from ``token_shards`` (the distributed prefix sum), so
+    the pinned packing formula lives in exactly ONE place; the per-row
+    content hash joins back on id (id-keyed equi-join, scale-safe),
+    then ONE aggregation with map-side combine."""
+    shards = token_shards(df, id_col, text_col, tokens_per_shard)
     h = F.conv(
         F.substring(
             F.md5(

@@ -106,12 +106,15 @@ def main() -> None:
         "Reading guide: `python-eval nodes` counts row-at-a-time",
         "BatchEvalPython — it must be 0 everywhere. The only Python in any",
         "plan is Arrow-vectorized (`arrow kernels`: ArrowEvalPython /",
-        "MapInPandas — the MinHash signature kernel). Dimension joins",
-        "broadcast (no sort-merge anywhere at these sizes); the",
-        "text-quality layer runs as pure whole-stage-codegen expressions",
-        "with zero joins and zero shuffles; q_token_shards shows 0",
-        "shuffles because its range-exchange is behind the localCheckpoint",
-        "materialization barrier. `window nodes` must be 0 for the",
+        "MapInPandas — the MinHash/SimHash signature and n-gram",
+        "kernels). Dimension joins broadcast (no sort-merge anywhere at",
+        "these sizes); the text-quality layer runs as pure",
+        "whole-stage-codegen expressions with zero joins and zero",
+        "shuffles; q_token_shards shows 0 shuffles because its",
+        "range-exchange is behind the localCheckpoint materialization",
+        "barrier (textstats.token_shards, the one packing path, also",
+        "behind q_shard_manifest and q_training_mixture). `window nodes`",
+        "must be 0 for the",
         "dedup/cap/curation family (line_dedup, source_caps,",
         "curation_funnel): their round-4 rewrites replaced skew-prone-key",
         "windows with aggregates + joins (AQE splits skewed joins, never",

@@ -1,5 +1,6 @@
 """Spark-free guard against dead helpers: every top-level function of
-the package must be referenced somewhere in the repository's Python
+the package, and of the test-only references under tests/parity/ and
+tests/oracles/, must be referenced somewhere in the repository's Python
 files other than at its own definition."""
 
 import ast
@@ -7,7 +8,12 @@ import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
-PACKAGE = ROOT / "indu_doc_transformer_spark"
+# directories whose top-level functions must each have a user
+CHECKED = (
+    ROOT / "indu_doc_transformer_spark",
+    ROOT / "tests" / "parity",
+    ROOT / "tests" / "oracles",
+)
 _DOTTED = re.compile(r"[A-Za-z_][\w.]*")
 
 
@@ -37,14 +43,14 @@ def _names(node: ast.AST) -> set[str]:
 
 
 def test_every_package_function_is_referenced():
-    defined = []  # (path, name) of the package's top-level defs
+    defined = []  # (path, name) of the checked top-level defs
     users = {}  # name -> {(path, top-level def it appears in, or None)}
     for path in _py_files():
         tree = ast.parse(path.read_text(encoding="utf-8"), str(path))
         for top in tree.body:
             is_def = isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef))
             owner = top.name if is_def else None
-            if is_def and PACKAGE in path.parents:
+            if is_def and any(d in path.parents for d in CHECKED):
                 defined.append((path, top.name))
             for name in _names(top):
                 users.setdefault(name, set()).add((path, owner))

@@ -17,6 +17,20 @@ BASE = (
 )
 
 
+NON_ASCII_ROWS = [
+    "İSTANBUL ıi KIŞ ΟΔΟΣ ΣΟΦΟΣ a b c İ İ İ",
+    "ǅemal ﬁx STRASSE ẞ İ I a b c",
+    "\xa0nbsp\u2003em a b c d",
+]
+
+# ends that Python's bare strip() removes but Spark trim keeps
+EDGE_WS_ROWS = [
+    "\xa0alpha beta gamma delta\xa0",
+    "\u2003lead em space here",
+    "tail\x1c",
+]
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     rows = [
@@ -27,6 +41,17 @@ def docs(spark):
         (4, "another unrelated document mentioning parquet files and arrow batches"),
     ]
     return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+
+@pytest.fixture(scope="module")
+def parity_docs(spark, docs):
+    """``docs`` plus the non-ASCII and edge-whitespace rows of the
+    MinHash/SimHash kernel parity tests."""
+    extra = spark.createDataFrame(
+        [(10 + i, t) for i, t in enumerate(NON_ASCII_ROWS + EDGE_WS_ROWS)],
+        "doc_id bigint, text string",
+    )
+    return docs.unionByName(extra)
 
 
 def test_operator_caches_are_scoped(spark, docs):
@@ -61,20 +86,22 @@ def test_minhash_lsh_finds_planted_neardup(docs):
     assert (0, 3) not in pairs and (3, 4) not in pairs
 
 
-def test_simhash_fast_matches_sql(spark, docs):
-    """The Arrow SimHash kernel must be bit-identical to the SQL
-    formulation (the DuckDB oracle checks the SQL one)."""
-    from pyspark.sql import functions as F
+def test_simhash_fast_matches_sql(parity_docs):
+    """The Arrow SimHash kernel must be bit-identical to the SQL fold
+    tests/parity/dedup_folds.simhash64 (the shape the DuckDB oracle
+    mirrors), non-ASCII text and edge whitespace that Spark ``trim``
+    keeps included."""
+    from parity.dedup_folds import simhash64
 
-    sql_side = {
-        r.doc_id: r.s
-        for r in docs.select("doc_id", dd.simhash64(F.col("text")).alias("s")).collect()
-    }
-    fast = {
-        r.doc_id: r.s
-        for r in docs.select("doc_id", dd._simhash_udf()(F.col("text")).alias("s")).collect()
-    }
-    assert sql_side == fast and len(fast) == 5
+    def fingerprints(expr):
+        return {
+            r.doc_id: r.s
+            for r in parity_docs.select("doc_id", expr.alias("s")).collect()
+        }
+
+    sql_side = fingerprints(simhash64(F.col("text")))
+    fast = fingerprints(dd._simhash_udf()(F.col("text")))
+    assert sql_side == fast and len(fast) == 11
 
 
 def test_simhash_neardup_pairs(spark, docs):
@@ -83,7 +110,7 @@ def test_simhash_neardup_pairs(spark, docs):
     out = dd.simhash_near_dup_pairs(docs, "doc_id", "text", 4, 6).collect()
     sh = {
         r.doc_id: r.s
-        for r in docs.select("doc_id", dd.simhash64(docs.text).alias("s")).collect()
+        for r in docs.select("doc_id", dd._simhash_udf()(docs.text).alias("s")).collect()
     }
     for r in out:
         assert r.id_a < r.id_b and r.hamming <= 6
@@ -91,23 +118,27 @@ def test_simhash_neardup_pairs(spark, docs):
     assert out
 
 
-def test_minhash_fast_matches_sql(spark, docs):
-    """The Arrow kernel must be bit-identical to the SQL formulation
-    (the DuckDB oracle checks the SQL one)."""
-    from pyspark.sql import functions as F
+def test_minhash_fast_matches_sql(parity_docs):
+    """The Arrow kernel must be bit-identical to the SQL folds
+    tests/parity/dedup_folds.word_shingles/minhash_signature (the shape
+    the DuckDB oracle mirrors), non-ASCII text and edge whitespace that
+    Spark ``trim`` keeps included."""
+    from parity.dedup_folds import minhash_signature, word_shingles
 
-    sql_side = docs.select(
+    sql_side = parity_docs.select(
         "doc_id",
-        dd.word_shingles(F.col("text"), 3).alias("sh"),
-    ).withColumn("sig", dd.minhash_signature(F.col("sh"), 16))
-    fast = docs.select("doc_id", dd._shingle_sig_udf(16, 3)(F.col("text")).alias("ss"))
+        word_shingles(F.col("text"), 3).alias("sh"),
+    ).withColumn("sig", minhash_signature(F.col("sh"), 16))
+    fast = parity_docs.select(
+        "doc_id", dd._shingle_sig_udf(16, 3)(F.col("text")).alias("ss")
+    )
     a = {r.doc_id: (list(r.sh), list(r.sig)) for r in sql_side.collect()}
     b = {r.doc_id: (list(r.ss.sh), list(r.ss.sig)) for r in fast.collect()}
-    assert a == b
+    assert a == b and len(a) == 11
 
 
 def test_simhash_identical_docs_equal(docs):
-    out = {r.doc_id: r.sh for r in docs.select("doc_id", dd.simhash64(F.col("text")).alias("sh")).collect()}
+    out = {r.doc_id: r.sh for r in docs.select("doc_id", dd._simhash_udf()(F.col("text")).alias("sh")).collect()}
     assert out[0] == out[2]
     assert len(out[0]) == 16
     # near-dup hamming distance small, unrelated larger
@@ -170,13 +201,6 @@ def test_ann_bruteforce_norm_precompute_parity(spark):
 # lower() (en/US) vs Python str.lower on dotted/dotless I, final sigma,
 # titlecase digraphs and capital sharp s; NBSP and em-space are not
 # separators on either side
-NON_ASCII_ROWS = [
-    "İSTANBUL ıi KIŞ ΟΔΟΣ ΣΟΦΟΣ a b c İ İ İ",
-    "ǅemal ﬁx STRASSE ẞ İ I a b c",
-    "\xa0nbsp\u2003em a b c d",
-]
-
-
 def test_decontam_gram_kernel_matches_sql(spark, monkeypatch):
     """The Arrow gram kernel must reproduce the interpreted-SQL fold
     (tests/parity/ngram_folds.distinct_grams) exactly — including NULL
@@ -328,41 +352,49 @@ def test_ann_lsh_multiprobe_recall_superset(spark):
 
 
 def test_connected_components_chain(spark):
-    """Min-label propagation converges across a 3-hop chain and leaves
-    disjoint components separate."""
+    """Every node's component is the smallest id reachable from it:
+    across a 3-hop chain reached from both ends and a longer chain,
+    with disjoint components kept separate."""
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (9, 3)], "id_a bigint, id_b bigint"
+        [(1, 2), (2, 3), (5, 6), (9, 3),
+         (30, 31), (31, 32), (32, 33), (33, 39)],
+        "id_a bigint, id_b bigint",
     )
     comp = {r.id: r.comp for r in dd.connected_components(edges).collect()}
-    assert comp == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 6: 5}
+    assert comp == {
+        1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 6: 5,
+        30: 30, 31: 30, 32: 30, 33: 30, 39: 30,
+    }
 
 
 def test_connected_components_star_matches_propagation(spark):
     """The large-star/small-star contraction must produce exactly the
-    min-label components of the propagation loop on a mixed graph
-    (chain + clique + singleton pair)."""
+    min-label components that label propagation defines, on a mixed
+    graph (chain + clique + singleton pair)."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21), (4, 9)],
         "id_a bigint, id_b bigint",
     )
-    star = {r.id: r.comp for r in dd.connected_components_star(edges).collect()}
-    prop = {r.id: r.comp for r in dd.connected_components(edges).collect()}
-    assert star == prop
+    comp = {r.id: r.comp for r in dd.connected_components(edges).collect()}
+    assert comp == {
+        1: 1, 2: 1, 3: 1, 4: 1, 9: 1,
+        10: 10, 11: 10, 12: 10, 20: 20, 21: 20,
+    }
 
 
-def test_connected_components_star_handles_adversarial_chain(spark):
-    """A long transitive chain is the adversarial case the propagation
-    loop cannot handle (O(diameter) rounds): on a 128-node chain the
-    star contraction converges in O(log n) rounds while propagation
-    exhausts a 10-round budget and fails loudly."""
+def test_keep_list_on_long_chain(spark):
+    """A long transitive chain (diameter ~ n) converges in O(log n)
+    rounds: on a 128-node chain every node joins component 0, and the
+    keep list over the chain's ids is exactly the min id."""
     n = 128
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a bigint, id_b bigint"
     )
-    comp = {r.id: r.comp for r in dd.connected_components_star(edges).collect()}
+    comp = {r.id: r.comp for r in dd.connected_components(edges).collect()}
     assert set(comp) == set(range(n)) and set(comp.values()) == {0}
-    with pytest.raises(RuntimeError, match="no convergence"):
-        dd.connected_components(edges, max_iters=10)
+    ids = spark.createDataFrame([(i,) for i in range(n)], "doc_id bigint")
+    keep = {r.doc_id for r in dd.keep_list_from_edges(ids, edges).collect()}
+    assert keep == {0}
 
 
 def test_keep_list_clamps_to_id_space(spark):
@@ -856,29 +888,27 @@ def test_curation_funnel_stages(spark):
 
 
 def test_token_shards_scalable_equals_direct(spark):
-    """The distributed two-pass prefix sum must match the single-window
-    layout exactly, for any partition count; shards respect the budget
-    boundary rule (shard = floor(tokens-before / budget))."""
+    """The distributed two-pass prefix sum must match the direct
+    id-ordered layout exactly, for any partition count; shards respect
+    the budget boundary rule (shard = floor(tokens-before / budget))."""
     from indu_doc_transformer_spark.operators import textstats as ts
 
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{j}" for j in range((i * 7) % 23 + 1))) for i in range(200)],
         "doc_id long, text string",
     )
-    direct = {r.id: (r.n_tokens, r.shard_id)
-              for r in ts.token_shards(docs, "doc_id", "text", 50).collect()}
+    # boundary rule: cumulative-before // 50
+    direct, cum = {}, 0
+    for i in range(200):
+        n = (i * 7) % 23 + 1
+        direct[i] = (n, cum // 50)
+        cum += n
     for p in (1, 3, 16):
         two_pass = {
             r.id: (r.n_tokens, r.shard_id)
-            for r in ts.token_shards_scalable(docs, "doc_id", "text", 50, p).collect()
+            for r in ts.token_shards(docs, "doc_id", "text", 50, p).collect()
         }
         assert two_pass == direct, p
-    # boundary rule: cumulative-before // 50
-    cum = 0
-    for i in range(200):
-        n, s = direct[i]
-        assert s == cum // 50
-        cum += n
 
 
 def test_null_keys_survive_the_skew_rewrites(spark):
@@ -1402,12 +1432,6 @@ def test_shard_manifest_verifies_delivery(spark):
             a["n_docs"], a["n_tokens"], a["first"], a["last"])
         assert m.content_hash == a["xor"], sid
     assert sum(m.n_docs for m in man.values()) == len(rows)
-    # the 100-TB path is a literal drop-in: same manifest through the
-    # distributed-prefix-sum assignment (one formula, never copied)
-    scalable = {r.shard_id: tuple(r) for r in ts2.shard_manifest(
-        df, "doc_id", "text", 25, assign=ts2.token_shards_scalable
-    ).collect()}
-    assert scalable == {k: tuple(v) for k, v in man.items()}
 
 
 def test_url_quality_total_on_adversarial_urls(spark):

@@ -148,3 +148,39 @@ def test_text_quality_layer_stays_jvm_side(spark, sf_dir="/root/testdata/sf0.001
     # filter-pushdown duplication of the kernel would show up here
     logical = qe.optimizedPlan().toString()
     assert logical.count("MapInPandas") == 2  # exactly one per stat family
+
+
+def test_token_packing_never_runs_single_task(spark, tmp_path):
+    """Token-shard packing, its release manifest and sequence packing
+    run the distributed prefix sum: no job they run (the checkpointed
+    per-partition windows, the subtotal collect, the final query) may
+    plan an ``Exchange SinglePartition`` — a global window funnels the
+    whole corpus through one task."""
+    import __spark_entry__ as entry
+
+    sf_dir = str(tmp_path)
+    spark.createDataFrame(
+        [(i, " ".join(f"w{j}" for j in range(40 + i % 90))) for i in range(300)],
+        "doc_id long, text string",
+    ).write.parquet(f"{sf_dir}/documents.parquet")
+
+    jsc = spark.sparkContext._jsc.sc()
+    conv = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executed_plans():
+        jsc.listenerBus().waitUntilEmpty()
+        return {
+            e.executionId(): e.physicalPlanDescription()
+            for e in conv.asJava(store.executionsList())
+        }
+
+    for q in ("q_token_shards", "q_shard_manifest", "q_sequence_pack"):
+        before = set(executed_plans())
+        df = entry.queries()[q](spark, sf_dir)
+        df.collect()
+        plans = [p for i, p in executed_plans().items() if i not in before]
+        assert plans, q  # the status store saw this query's executions
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        for plan in plans:
+            assert "SinglePartition" not in plan, q
